@@ -140,7 +140,6 @@ def build_app(
     accounts: DataFrame,
     checkpoint_dir: str,
     sink_format: str = "memory",
-    sink_options: dict[str, dict[str, str]] | None = None,
     available_now: bool = False,
 ) -> PipelineSupervisor:
     """Wire the five flows into a PipelineSupervisor (not started). Each
@@ -150,10 +149,12 @@ def build_app(
     supervisor = PipelineSupervisor(max_restarts=cfg.max_restarts)
     flows = build_pipelines(envelopes, accounts, cfg)
     for name, (df, mode) in flows.items():
-        opts = dict((sink_options or {}).get(name, {}))
+        opts: dict[str, str] = {}
         if sink_format == "kafka":
-            opts.setdefault("kafka.bootstrap.servers", cfg.bootstrap_servers)
-            opts.setdefault("topic", SP.SINK_TOPICS[name])
+            opts = {
+                "kafka.bootstrap.servers": cfg.bootstrap_servers,
+                "topic": SP.SINK_TOPICS[name],
+            }
 
         def builder(df=df, name=name, mode=mode, opts=opts):
             return SP.start_pipeline(

@@ -8,8 +8,9 @@ and normalize types (double IDs → long, money → 4dp, Debezium micro/milli
 timestamps → TimestampType).
 
 Pure column expressions — the same functions work on batch DataFrames and
-streaming DataFrames (readStream + from_json/from_avro), so every pipeline
-has a batch twin for DuckDB-oracle checking.
+streaming DataFrames (file/Kafka readStream with JSON or Avro values, the
+latter decoded by sources.schema_registry.envelopes_from_avro_registry), so
+every pipeline has a batch twin for DuckDB-oracle checking.
 """
 
 from __future__ import annotations
@@ -293,71 +294,3 @@ def retraction_aggregate(
         .filter(F.col("n_current") > 0)
     )
 
-
-def strip_confluent_framing(value_col: str = "value") -> F.Column:
-    """Drop the 5-byte Confluent wire-format header (0x00 magic + 4-byte
-    big-endian schema id) from a binary Kafka value, leaving the raw Avro
-    body (reference AvroSerdes.java:35-58 reads via Schema Registry, which
-    performs the same strip). substring is 1-based: the body starts at
-    byte 6 and runs length-5 bytes."""
-    return F.expr(f"substring({value_col}, 6, length({value_col}) - 5)")
-
-
-def envelopes_from_avro(
-    raw: DataFrame,
-    avro_schema_json: str | None = None,
-    value_col: str = "value",
-    confluent_framed: bool = False,
-    registry=None,
-    spark_envelope_schema=None,
-) -> DataFrame:
-    """F1 — Avro bytes → envelope struct via from_avro (SURVEY.md §2.2).
-
-    The reference consumes Confluent-framed Avro through Schema Registry
-    (AvroSerdes.java:35-58); ``confluent_framed=True`` strips the 5-byte
-    magic+schema-id header before decoding.  Two schema-resolution modes:
-
-    - explicit writer schema: pass ``avro_schema_json`` (JVM ``from_avro``
-      path; requires the spark-avro package on the classpath, raises a
-      clear error otherwise).  Without the jar, the tested pure-Python
-      twin ``sources.avro_codec.envelopes_from_avro_py`` decodes the same
-      wire format with identical downstream semantics.
-    - registry resolution: pass ``registry=`` (a
-      ``sources.schema_registry.SchemaRegistry`` — Dict- or HTTP-backed)
-      plus ``spark_envelope_schema``; the writer schema is then resolved
-      PER RECORD from each frame's Confluent schema id, matching the
-      reference's AvroSerdes exactly — no hand-passed schema JSON.
-    """
-    if registry is not None:
-        if spark_envelope_schema is None:
-            raise ValueError(
-                "registry mode needs spark_envelope_schema (the typed "
-                "envelope StructType to parse decoded records into)"
-            )
-        from cdc_stream_processor_spark.sources.schema_registry import (
-            envelopes_from_avro_registry,
-        )
-
-        return envelopes_from_avro_registry(
-            raw, registry, spark_envelope_schema, value_col
-        )
-    if avro_schema_json is None:
-        raise ValueError(
-            "pass either avro_schema_json (explicit writer schema) or "
-            "registry= (Confluent schema-id resolution)"
-        )
-    try:
-        from pyspark.sql.avro.functions import from_avro
-    except ImportError as e:  # pragma: no cover
-        raise RuntimeError(
-            "envelopes_from_avro requires the spark-avro package "
-            "(--packages org.apache.spark:spark-avro_2.13:<spark-version>)"
-        ) from e
-    payload = F.col(value_col)
-    if confluent_framed:
-        payload = strip_confluent_framing(value_col)
-    return raw.select(
-        from_avro(payload, avro_schema_json, {"mode": "PERMISSIVE"}).alias(
-            "envelope"
-        )
-    ).select("envelope.*")

@@ -160,6 +160,17 @@ def dormancy_candidates(
     )
 
 
+def balance_eligible(txns: DataFrame) -> DataFrame:
+    """P9 — balance reconciliation input filter (ABBankTopology.java:311-313):
+    COMPLETED with non-negative balance_after. Shared by the batch twin and
+    streaming.state.balance_reconciliation_stream."""
+    return txns.filter(
+        is_completed(F.col("transaction_status"))
+        & F.col("balance_after").isNotNull()
+        & (F.col("balance_after") >= 0)
+    )
+
+
 def balance_reconciliation_batch(
     txns: DataFrame,
     tolerance: float = BALANCE_TOLERANCE,
@@ -182,11 +193,7 @@ def balance_reconciliation_batch(
     """
     from pyspark.sql.window import Window
 
-    eligible = txns.filter(
-        is_completed(F.col("transaction_status"))
-        & F.col("balance_after").isNotNull()
-        & (F.col("balance_after") >= 0)
-    )
+    eligible = balance_eligible(txns)
     w = Window.partitionBy("account_id").orderBy("initiated_at", "transaction_id")
     expected = F.coalesce(
         F.lag("balance_after").over(w), F.col("balance_before")

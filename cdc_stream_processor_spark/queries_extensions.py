@@ -1145,7 +1145,9 @@ v AS (
   FROM embeddings
 ), scored AS (
   SELECT v.label, v.vec_id,
-         ROUND(({dot}) / (sqrt({nv}) * sqrt({nc})), 6) AS centroid_sim
+         -- +0.0 folds DuckDB's signed-zero ROUND (a tiny negative cosine
+         -- rounds to -0.0) onto the engine's 0.0, as SQL_CDC_PARSE does
+         ROUND(({dot}) / (sqrt({nv}) * sqrt({nc})), 6) + 0.0 AS centroid_sim
   FROM v JOIN cents c USING (label)
 )
 SELECT label, vec_id, centroid_sim, rank FROM (
@@ -1177,7 +1179,8 @@ v AS (
   FROM embeddings
 ), scored AS (
   SELECT v.vec_id, c.label,
-         ROUND(({dot}) / (sqrt({nv}) * sqrt({nc})), 6) AS sim
+         -- + 0.0: signed-zero fold, as in _embedding_outliers_sql
+         ROUND(({dot}) / (sqrt({nv}) * sqrt({nc})), 6) + 0.0 AS sim
   FROM v CROSS JOIN cents c
 )
 SELECT vec_id, label AS assigned_label, sim FROM scored
@@ -1683,7 +1686,8 @@ def _centroid_pair_sim_sql() -> str:
     return f"""
 WITH cents AS ({SQL_EMBEDDING_CENTROIDS})
 SELECT a.label AS label_a, b.label AS label_b,
-       ROUND(({dot}) / (sqrt({na}) * sqrt({nb})), 6) AS cosine_sim
+       -- + 0.0: signed-zero fold, as in _embedding_outliers_sql
+       ROUND(({dot}) / (sqrt({na}) * sqrt({nb})), 6) + 0.0 AS cosine_sim
 FROM cents a JOIN cents b ON a.label < b.label
 """
 

@@ -1,13 +1,11 @@
 """Minimal pure-Python Avro binary codec for the Debezium CDC envelopes.
 
 The reference's primary ingress is Confluent-framed Avro via Schema Registry
-(AvroSerdes.java:35-58; writer schemas in src/main/avro/*.avsc). Spark's
-native path is `from_avro` (sql/avro), but that function needs the external
-spark-avro jar on the classpath. This module implements the Avro *binary
-encoding* spec (varint zigzag longs, length-prefixed strings/bytes, IEEE
-little-endian floats/doubles, union-index prefix, record = field
-concatenation — the public Apache Avro 1.x specification) for the subset of
-schema forms the CDC envelopes use:
+(AvroSerdes.java:35-58; writer schemas in src/main/avro/*.avsc). This module
+implements the Avro *binary encoding* spec (varint zigzag longs,
+length-prefixed strings/bytes, IEEE little-endian floats/doubles,
+union-index prefix, record = field concatenation — the public Apache Avro
+1.x specification) for the subset of schema forms the CDC envelopes use:
 
     null | boolean | int | long | float | double | string | bytes
     records (with named-type re-references, e.g. "after": ["null","Value"])
@@ -16,18 +14,19 @@ schema forms the CDC envelopes use:
 Logical/connect annotations (MicroTimestamp etc.) ride on the underlying
 primitive and are left untouched — exactly how Debezium emits them.
 
-The decoder runs inside an Arrow-batched ``mapInPandas`` (one Python pass
-per batch of Kafka values — no row-at-a-time UDF), emits the envelope as a
-JSON string, and hands it to the SAME ``from_json`` + filter path the JSON
-serde uses, so all downstream parsing/tests are shared between the two wire
-formats.
+``sources.schema_registry.envelopes_from_avro_registry`` runs the decoder
+inside an Arrow-batched ``mapInPandas`` (one Python pass per batch of Kafka
+values — no row-at-a-time UDF), resolving each frame's writer schema by its
+Confluent schema id; the envelope leaves as a JSON string through the SAME
+``from_json`` + filter path the JSON serde uses, so all downstream
+parsing/tests are shared between the two wire formats.
 """
 
 from __future__ import annotations
 
 import json
 import struct
-from typing import Any, Iterator
+from typing import Any
 
 CONFLUENT_HEADER_LEN = 5  # 0x00 magic + 4-byte big-endian schema id
 
@@ -94,6 +93,8 @@ def _decode(schema: Any, data: bytes, pos: int, names: dict[str, Any]):
     schema = _resolve(schema, names)
     if isinstance(schema, list):  # union: long index, then branch
         idx, pos = _read_long(data, pos)
+        if not 0 <= idx < len(schema):
+            raise ValueError(f"union index {idx} outside {len(schema)} branches")
         return _decode(schema[idx], data, pos, names)
     if isinstance(schema, dict):  # record
         out: dict[str, Any] = {}
@@ -197,51 +198,3 @@ def encode_record(
     _encode(schema, value, buf, names)
     return bytes(buf)
 
-
-# --- Spark integration --------------------------------------------------------
-
-
-def envelopes_from_avro_py(
-    raw,
-    avro_schema_json: str,
-    spark_envelope_schema,
-    value_col: str = "value",
-    confluent_framed: bool = True,
-):
-    """Jar-free F1 path: binary Kafka values → envelope rows.
-
-    Arrow-batched mapInPandas decodes each value against the writer schema
-    and re-emits the envelope as JSON; the result flows through the same
-    PERMISSIVE ``from_json`` used by the JSON serde, so corrupt payloads
-    degrade to null envelopes (F2 log-and-continue semantics) instead of
-    failing the query. Works on batch and streaming DataFrames alike.
-    """
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    schema = json.loads(avro_schema_json)
-    offset = CONFLUENT_HEADER_LEN if confluent_framed else 0
-
-    def decode_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for v in pdf[value_col]:
-                try:
-                    rec = decode_record(schema, bytes(v)[offset:])
-                    out.append(json.dumps(rec))
-                except (
-                    ValueError,  # malformed Avro / bad utf-8
-                    TypeError,  # null / non-bytes value cell
-                    struct.error,  # truncated primitive
-                    IndexError,  # varint runs off the buffer
-                ):  # data-shaped corruption → null envelope downstream
-                    out.append(None)
-            yield pd.DataFrame({"_json": pd.Series(out, dtype="object")})
-
-    decoded = raw.select(F.col(value_col)).mapInPandas(
-        decode_batch, schema="_json string"
-    )
-    parsed = decoded.select(
-        F.from_json(F.col("_json"), spark_envelope_schema).alias("env")
-    )
-    return parsed.filter(F.col("env").isNotNull()).select("env.*")

@@ -121,12 +121,13 @@ def envelopes_from_avro_registry(
     schema id — no hand-passed schema JSON (closes the reference's
     AvroSerdes.java:35-44 gap).
 
-    Same execution shape as ``envelopes_from_avro_py``: Arrow-batched
-    mapInPandas decode → JSON → PERMISSIVE from_json, so corrupt frames
-    and unknown schema ids degrade to dropped null envelopes (F2
-    log-and-continue), and the plan works identically on batch and
-    streaming inputs.  Parsed writer schemas are cached per executor
-    process (keyed by id), so resolution is one dict probe per value.
+    The one Avro ingress path: Arrow-batched mapInPandas decode (the
+    pure-Python ``avro_codec``, so no spark-avro jar is needed) → JSON →
+    PERMISSIVE from_json, so corrupt frames and unknown schema ids degrade
+    to dropped null envelopes (F2 log-and-continue), and the plan works
+    identically on batch and streaming inputs.  Parsed writer schemas are
+    cached per executor process (keyed by id), so resolution is one dict
+    probe per value.
 
     Only DATA-shaped failures take the corrupt-drop path (bad framing,
     id missing from the registry, malformed Avro/JSON); infrastructure

@@ -90,7 +90,6 @@ class PipelineSupervisor:
                 "exception": str(exc) if exc else None,
                 "last_error": self._last_error[name],
                 "restarts": self._restarts[name],
-                "batches_processed": (q.lastProgress or {}).get("batchId"),
                 "progress": _progress_summary(q.lastProgress),
             }
         return out

@@ -13,8 +13,9 @@ Faithful semantics (SURVEY.md §2.10):
 - tumbling windows epoch-aligned UTC, labels in Africa/Lagos
 - at-least-once delivery via checkpointing
 
-Sources: Kafka (value = JSON envelope; Avro via from_avro where the
-spark-avro package is on the classpath) or file streams of envelope data.
+Sources: Kafka (value = JSON envelope; Confluent-framed Avro values go
+through sources.schema_registry.envelopes_from_avro_registry) or file
+streams of envelope data.
 The Kafka integration jar may be absent on a bare local install — the reader
 raises a clear error in that case; tests use file/memory sources.
 """

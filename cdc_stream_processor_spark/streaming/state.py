@@ -12,8 +12,9 @@ then stores its ``balance_after`` (:89).
 Scale note: state is partitioned by account_id across executors; with the
 RocksDB state-store provider (spark.sql.streaming.stateStore.providerClass)
 this holds billions of keys. The batch twin
-(operators.pipelines.balance_reconciliation_batch) is the deterministic
-replay used for the DuckDB oracle.
+(operators.pipelines.balance_reconciliation_batch) shares the eligibility
+filter and tolerance defined there and is the deterministic replay used
+for the DuckDB oracle.
 """
 
 from __future__ import annotations
@@ -22,11 +23,13 @@ from typing import Any, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-BALANCE_TOLERANCE = 0.01
+from cdc_stream_processor_spark.operators.pipelines import (
+    BALANCE_TOLERANCE,
+    balance_eligible,
+)
 
 OUTPUT_SCHEMA = T.StructType(
     [
@@ -42,11 +45,17 @@ OUTPUT_SCHEMA = T.StructType(
 STATE_SCHEMA = T.StructType([T.StructField("last_balance", T.DoubleType())])
 
 
-def _reconcile_rows(
-    account_id, rows: pd.DataFrame, last
-) -> tuple[list[dict[str, Any]], Any]:
-    """Shared reconciliation kernel (both stateful APIs): fold the batch in
-    (initiated_at, transaction_id) order against the stored balance."""
+def _reconcile_group(
+    key: tuple[Any, ...],
+    batches: Iterator[pd.DataFrame],
+    state: GroupState,
+) -> Iterator[pd.DataFrame]:
+    """Per-account reconciliation over one micro-batch: fold the rows (which
+    may span multiple Arrow chunks) in (initiated_at, transaction_id) order
+    against the stored balance."""
+    (account_id,) = key
+    last = state.get[0] if state.exists else None
+    rows = pd.concat(list(batches), ignore_index=True)
     rows = rows.sort_values(["initiated_at", "transaction_id"])
     out: list[dict[str, Any]] = []
     for r in rows.itertuples(index=False):
@@ -63,35 +72,8 @@ def _reconcile_rows(
             }
         )
         last = r.balance_after  # store := BALANCE_AFTER (reference :89)
-    return out, last
-
-
-def _reconcile_group(
-    key: tuple[Any, ...],
-    batches: Iterator[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
-    """Per-account reconciliation over one micro-batch (rows may span
-    multiple Arrow chunks; ordered by event time within the group)."""
-    (account_id,) = key
-    last = state.get[0] if state.exists else None
-    rows = pd.concat(list(batches), ignore_index=True)
-    out, last = _reconcile_rows(account_id, rows, last)
     state.update((last,))
     yield pd.DataFrame(out, columns=[f.name for f in OUTPUT_SCHEMA.fields])
-
-
-def _eligible(txns: DataFrame) -> DataFrame:
-    """P9 eligibility (ABBankTopology.java:311-313): COMPLETED with
-    non-negative balance_after."""
-    return txns.filter(
-        (F.col("transaction_status") == "COMPLETED")
-        & F.col("balance_after").isNotNull()
-        & (F.col("balance_after") >= 0)
-    ).select(
-        "account_id", "transaction_id", "balance_before", "balance_after",
-        "initiated_at",
-    )
 
 
 def balance_reconciliation_stream(txns: DataFrame) -> DataFrame:
@@ -100,7 +82,11 @@ def balance_reconciliation_stream(txns: DataFrame) -> DataFrame:
     Input: cdc.parse_transactions output (streaming or batch DataFrame).
     Runs on any state-store provider (HDFS-backed default, RocksDB opt-in).
     """
-    return _eligible(txns).groupBy("account_id").applyInPandasWithState(
+    eligible = balance_eligible(txns).select(
+        "account_id", "transaction_id", "balance_before", "balance_after",
+        "initiated_at",
+    )
+    return eligible.groupBy("account_id").applyInPandasWithState(
         _reconcile_group,
         outputStructType=OUTPUT_SCHEMA,
         stateStructType=STATE_SCHEMA,
@@ -108,45 +94,3 @@ def balance_reconciliation_stream(txns: DataFrame) -> DataFrame:
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
-
-def balance_reconciliation_tws(txns: DataFrame) -> DataFrame:
-    """Spark 4 ``transformWithStateInPandas`` form of the same operator —
-    the successor stateful API (typed per-key value state via a
-    StatefulProcessor, RocksDB-provider-backed), mirroring the reference's
-    Processor-API node one-to-one: init = open store handle
-    (BalanceReconciliationProcessor.java:50-55), handleInputRows = process()
-    loop (:62-125), value state = the changelog-backed KV store (:71,89).
-
-    Requires spark.sql.streaming.stateStore.providerClass = RocksDB (the
-    API's documented requirement) and the ``protobuf`` Python package (the
-    state-server wire protocol — absent on minimal installs, so the test is
-    importorskip-gated); balance_reconciliation_stream remains the
-    provider-agnostic twin. Identical output contract (OUTPUT_SCHEMA)."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class _BalanceProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._last = handle.getValueState("last_balance", STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timer_values):
-            (account_id,) = key
-            last = self._last.get()[0] if self._last.exists() else None
-            pdf = pd.concat(list(rows), ignore_index=True)
-            out, last = _reconcile_rows(account_id, pdf, last)
-            self._last.update((last,))
-            yield pd.DataFrame(
-                out, columns=[f.name for f in OUTPUT_SCHEMA.fields]
-            )
-
-        def close(self) -> None:
-            pass
-
-    return _eligible(txns).groupBy("account_id").transformWithStateInPandas(
-        _BalanceProcessor(),
-        outputStructType=OUTPUT_SCHEMA,
-        outputMode="append",
-        timeMode="none",
-    )

@@ -129,79 +129,27 @@ def test_zigzag_negative_and_large_longs():
         assert AC.decode_record(schema, blob) == {"v": v}
 
 
+def test_union_index_out_of_range_raises():
+    """A union branch index outside [0, len(branches)) is corrupt data, not
+    a Python negative index: zigzag 0x01 = -1 must not select the last
+    branch, and 0x04 = 2 must not run past a two-branch union."""
+    schema = {
+        "type": "record",
+        "name": "R",
+        "fields": [{"name": "x", "type": ["null", "long"]}],
+    }
+    assert AC.decode_record(schema, b"\x02\x04") == {"x": 2}
+    for bad in (b"\x01\x04", b"\x04\x04"):
+        with pytest.raises(ValueError, match="union index"):
+            AC.decode_record(schema, bad)
+
+
 def test_unknown_type_reference_raises():
     with pytest.raises(ValueError, match="unknown Avro type reference"):
         AC.decode_record(
             {"type": "record", "name": "R", "fields": [{"name": "x", "type": "Nope"}]},
             b"\x00",
         )
-
-
-def test_envelopes_from_avro_py_end_to_end(spark):
-    """Framed Avro values → envelopes → the standard parse_transactions
-    path; a corrupt frame degrades to a dropped null envelope (F2), and a
-    delete envelope is dropped by the P2 filter."""
-    schema_json = json.dumps(ENVELOPE_SCHEMA)
-    good = AC.encode_record(
-        ENVELOPE_SCHEMA, _envelope(_image(1.0, 600_000.0)), confluent_schema_id=7
-    )
-    delete = AC.encode_record(
-        ENVELOPE_SCHEMA,
-        {"before": _image(2.0), "after": None, "op": "d", "ts_ms": 1,
-         "snapshot": "false"},
-        confluent_schema_id=7,
-    )
-    corrupt = b"\x00\x00\x00\x00\x07\x01\x02 not avro"
-    raw = spark.createDataFrame(
-        [(bytearray(good),), (bytearray(delete),), (bytearray(corrupt),)],
-        "value binary",
-    )
-    envs = AC.envelopes_from_avro_py(
-        raw, schema_json, schemas.TRANSACTION_ENVELOPE
-    )
-    rows = cdc.parse_transactions(envs).collect()
-    assert [(r.transaction_id, r.amount) for r in rows] == [(1, 600_000.0)]
-
-
-def _jvm_avro_available(spark) -> bool:
-    """True iff the from_avro SQL function is actually usable — probe by
-    evaluating it (class-presence checks lie: the wrapper classes can be on
-    the classpath while the Avro data source is not loaded, raising
-    AVRO_NOT_LOADED_SQL_FUNCTIONS_UNUSABLE at analysis time)."""
-    try:
-        from pyspark.sql import functions as F
-        from pyspark.sql.avro.functions import from_avro
-
-        probe_schema = json.dumps(
-            {"type": "record", "name": "p", "fields": [{"name": "x", "type": "long"}]}
-        )
-        spark.range(1).select(
-            from_avro(F.lit(bytearray(b"\x02")), probe_schema)
-        ).collect()
-        return True
-    except Exception:
-        return False
-
-
-def test_envelopes_from_avro_jvm_matches_python_codec(spark):
-    """Classpath parity (reference AvroSerdes.java:35-58): the JVM
-    from_avro path must decode the same Confluent-framed bytes to the same
-    envelopes as the pure-Python codec. Auto-skips where the spark-avro
-    jar isn't shipped (this container), runs wherever it is."""
-    if not _jvm_avro_available(spark):
-        pytest.skip("spark-avro jar not on classpath")
-    schema_json = json.dumps(ENVELOPE_SCHEMA)
-    good = AC.encode_record(
-        ENVELOPE_SCHEMA, _envelope(_image(1.0, 600_000.0)), confluent_schema_id=7
-    )
-    raw = spark.createDataFrame([(bytearray(good),)], "value binary")
-    got_jvm = cdc.parse_transactions(
-        cdc.envelopes_from_avro(raw, schema_json, confluent_framed=True)
-    ).collect()
-    got_py = cdc.parse_transactions(
-        AC.envelopes_from_avro_py(raw, schema_json, schemas.TRANSACTION_ENVELOPE)
-    ).collect()
-    assert [tuple(r) for r in got_jvm] == [tuple(r) for r in got_py]
 
 
 # --- Schema Registry resolution (reference AvroSerdes.java:35-44) -------------
@@ -250,21 +198,52 @@ def test_http_registry_pickles_without_cache():
     assert clone._cache == {}  # executors start cold, refetch once per id
 
 
+def test_envelopes_from_avro_py_end_to_end(spark):
+    """Framed Avro values decoded by the pure-Python codec (the registry
+    path, one writer schema) → envelopes → the standard parse_transactions
+    path; a corrupt frame degrades to a dropped null envelope (F2), and a
+    delete envelope is dropped by the P2 filter."""
+    from cdc_stream_processor_spark.sources import schema_registry as SR
+
+    reg = SR.DictSchemaRegistry({7: json.dumps(ENVELOPE_SCHEMA)})
+    good = AC.encode_record(
+        ENVELOPE_SCHEMA, _envelope(_image(1.0, 600_000.0)), confluent_schema_id=7
+    )
+    delete = AC.encode_record(
+        ENVELOPE_SCHEMA,
+        {"before": _image(2.0), "after": None, "op": "d", "ts_ms": 1,
+         "snapshot": "false"},
+        confluent_schema_id=7,
+    )
+    corrupt = b"\x00\x00\x00\x00\x07\x01\x02 not avro"
+    raw = spark.createDataFrame(
+        [(bytearray(good),), (bytearray(delete),), (bytearray(corrupt),)],
+        "value binary",
+    )
+    envs = SR.envelopes_from_avro_registry(
+        raw, reg, schemas.TRANSACTION_ENVELOPE
+    )
+    rows = cdc.parse_transactions(envs).collect()
+    assert [(r.transaction_id, r.amount) for r in rows] == [(1, 600_000.0)]
+
+
 def test_envelopes_from_avro_registry_end_to_end(spark):
-    """Framed fixtures round-trip through envelopes_from_avro(registry=...)
-    with NO hand-passed writer schema: ids resolve per record (two distinct
-    ids in one batch), an unknown id and a corrupt frame both degrade to
-    dropped null envelopes (F2 log-and-continue)."""
+    """Framed fixtures round-trip through envelopes_from_avro_registry with
+    NO hand-passed writer schema: ids resolve per record (two distinct ids
+    in one batch). An unknown id, a corrupt frame, a null value cell and a
+    truncated frame all degrade to dropped null envelopes (F2
+    log-and-continue), and a delete envelope is dropped by the P2 filter."""
     from cdc_stream_processor_spark.sources import schema_registry as SR
 
     reg = SR.DictSchemaRegistry(
         {7: json.dumps(ENVELOPE_SCHEMA), 8: json.dumps(ENVELOPE_SCHEMA)}
     )
+    good = AC.encode_record(
+        ENVELOPE_SCHEMA, _envelope(_image(1.0, 600_000.0)),
+        confluent_schema_id=7,
+    )
     rows = [
-        AC.encode_record(
-            ENVELOPE_SCHEMA, _envelope(_image(1.0, 600_000.0)),
-            confluent_schema_id=7,
-        ),
+        good,
         AC.encode_record(
             ENVELOPE_SCHEMA, _envelope(_image(2.0, 700_000.0)),
             confluent_schema_id=8,
@@ -272,12 +251,24 @@ def test_envelopes_from_avro_registry_end_to_end(spark):
         AC.encode_record(  # id 9 not registered → dropped
             ENVELOPE_SCHEMA, _envelope(_image(3.0)), confluent_schema_id=9
         ),
+        AC.encode_record(  # delete → decoded, then dropped by P2
+            ENVELOPE_SCHEMA,
+            {"before": _image(4.0), "after": None, "op": "d", "ts_ms": 1,
+             "snapshot": "false"},
+            confluent_schema_id=7,
+        ),
         b"\x00\x00\x00\x00\x07\x01\x02 not avro",  # corrupt → dropped
+        good[:6],  # truncated mid-record: varint runs off → dropped
+        None,  # null value cell → dropped
     ]
-    raw = spark.createDataFrame([(bytearray(b),) for b in rows], "value binary")
-    envs = cdc.envelopes_from_avro(
-        raw, registry=reg, spark_envelope_schema=schemas.TRANSACTION_ENVELOPE
+    raw = spark.createDataFrame(
+        [(bytearray(b) if b is not None else None,) for b in rows],
+        "value binary",
     )
+    envs = SR.envelopes_from_avro_registry(
+        raw, reg, schemas.TRANSACTION_ENVELOPE
+    )
+    assert envs.count() == 3  # two creates + the delete
     out = cdc.parse_transactions(envs).collect()
     assert sorted((r.transaction_id, r.amount) for r in out) == [
         (1, 600_000.0),
@@ -308,10 +299,3 @@ def test_registry_infra_failure_propagates(spark):
     with pytest.raises(Exception, match="registry unreachable"):
         envs.collect()
 
-
-def test_envelopes_from_avro_requires_schema_or_registry(spark):
-    raw = spark.createDataFrame([(bytearray(b"x"),)], "value binary")
-    with pytest.raises(ValueError, match="avro_schema_json"):
-        cdc.envelopes_from_avro(raw)
-    with pytest.raises(ValueError, match="spark_envelope_schema"):
-        cdc.envelopes_from_avro(raw, registry=object())

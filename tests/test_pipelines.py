@@ -350,17 +350,3 @@ def test_scalar_format_amount(spark):
 
     out = [r[0] for r in df.select(format_amount(F.col("amt"), F.col("cur"))).collect()]
     assert out == ["₦1,234,567.89", "USD 50.00", "₦0.00"]
-
-
-def test_envelopes_from_avro_gated_without_package(spark):
-    """spark-avro isn't bundled here; the gate must raise a clear error
-    (AnalysisException from the unloaded data source) rather than silently
-    misparse."""
-    import pytest
-
-    from cdc_stream_processor_spark import cdc
-
-    raw = spark.createDataFrame([(bytearray(b"\x00\x00\x00\x00\x01x"),)], "value binary")
-    schema = '{"type":"record","name":"r","fields":[{"name":"id","type":"long"}]}'
-    with pytest.raises(Exception, match="[Aa]vro"):
-        cdc.envelopes_from_avro(raw, schema, confluent_framed=True).collect()

@@ -464,95 +464,6 @@ def test_balance_state_on_rocksdb_provider(spark, tmpdirs):
             spark.conf.set(key, prev)
 
 
-def test_transform_with_state_twin_matches_applyinpandas(spark, tmpdirs):
-    """transformWithStateInPandas (Spark 4 stateful API, RocksDB-required)
-    must reproduce the applyInPandasWithState operator exactly: same
-    bootstrap, same cross-batch state, same output schema. The API's state
-    server speaks protobuf from the Python side — skip where the package
-    isn't installed."""
-    pytest.importorskip(
-        "google.protobuf.descriptor",
-        reason="transformWithStateInPandas needs the protobuf package",
-    )
-    from cdc_stream_processor_spark.session import ROCKSDB_PROVIDER
-    from cdc_stream_processor_spark.streaming.state import (
-        balance_reconciliation_tws,
-    )
-
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, ROCKSDB_PROVIDER)
-    src, ckpt, out_dir = f"{tmpdirs}/src", f"{tmpdirs}/ckpt", f"{tmpdirs}/out"
-    try:
-        def run_batch():
-            t = SP.parsed_transaction_stream(SP.read_file_envelopes(spark, src))
-            q = SP.start_pipeline(
-                balance_reconciliation_tws(t),
-                "balance_tws",
-                ckpt,
-                output_mode="append",
-                sink_format="parquet",
-                sink_options={"path": out_dir},
-                trigger_available_now=True,
-            )
-            q.awaitTermination(120)
-
-        _write_envelopes(
-            spark,
-            src,
-            [
-                fx.envelope(
-                    fx.txn_image(
-                        txn_id=1.0, balance_before=100.0, balance_after=90.0,
-                        initiated_at_us=1_700_000_000 * US,
-                    )
-                )
-            ],
-        )
-        run_batch()
-        _write_envelopes(
-            spark,
-            src,
-            [
-                fx.envelope(
-                    fx.txn_image(
-                        txn_id=2.0, balance_before=95.0, balance_after=80.0,
-                        initiated_at_us=1_700_000_060 * US,
-                    )
-                )
-            ],
-        )
-        run_batch()
-        by_txn = {r.transaction_id: r for r in spark.read.parquet(out_dir).collect()}
-        assert by_txn[1].severity == "LOW" and by_txn[1].discrepancy == 0.0
-        assert by_txn[2].severity == "HIGH" and by_txn[2].discrepancy == 5.0
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
-
-
-def test_confluent_framing_strip_offsets(spark):
-    """F1 framing arithmetic (AvroSerdes.java:35-58): 0x00 magic + 4-byte
-    schema id stripped, body preserved byte-for-byte — no spark-avro jar
-    needed to verify the substring offsets."""
-    framed = b"\x00\x00\x00\x00\x07" + b"avro-body-bytes"
-    header_only = b"\x00\x00\x00\x02\x19"
-    df = spark.createDataFrame(
-        [(1, bytearray(framed)), (2, bytearray(header_only))],
-        "id long, value binary",
-    )
-    out = {
-        r.id: bytes(r.body) if r.body is not None else None
-        for r in df.select(
-            "id", cdc.strip_confluent_framing("value").alias("body")
-        ).collect()
-    }
-    assert out[1] == b"avro-body-bytes"
-    assert out[2] == b""  # header-only frame -> empty Avro body
-
-
 def test_supervisor_restarts_failed_query_and_serves_health(spark, tmpdirs):
     """Failure injection: the sink throws on its first batch; the supervisor
     restarts the query from its checkpoint (ABBankStreamsApp.java:55-68
